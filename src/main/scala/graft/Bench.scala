@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Benchmark main: times every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, materializing through the noop sink (count() would
@@ -88,18 +89,20 @@ object Bench {
     val attempts = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       attempts(name) = attempts.getOrElse(name, 0) + 1
-      val t0 = System.nanoTime()
-      val ok =
-        try { materialize(fn(spark, sfDir)); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          e.printStackTrace()
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Timed end-to-end including any internal persists; drop leftover
-      // cached relations so reruns and later queries start cold.
-      spark.catalog.clearCache()
+      // Timed end-to-end including any internal boundaries; the scope
+      // releases them after the clock stops, so reruns and later queries
+      // start cold.
+      val (ok, dt) = Boundary.scoped {
+        val t0 = System.nanoTime()
+        val ok =
+          try { materialize(fn(spark, sfDir)); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            e.printStackTrace()
+            false
+          }
+        (ok, (System.nanoTime() - t0) / 1e9)
+      }
       if (ok) { runs(name) = dt :: runs.getOrElse(name, Nil); Some(dt) } else None
     }
 
@@ -188,9 +191,9 @@ object Bench {
     // Only SUCCESSFUL reps count (a crashing canary must not hand a
     // partial-run time to the cross-round normalizer — the same
     // fast-crash-reads-as-speedup failure the main runs guard); zero
-    // successes reports the visibly-wrong -1 sentinel. clearCache sits
-    // outside the timed window: the reference measures the query, not the
-    // cache teardown.
+    // successes reports the visibly-wrong -1 sentinel. The scope's release
+    // sits outside the timed window: the reference measures the query, not
+    // the cache teardown.
     // q132 is the ANN-family canary (VERDICT r14 #8): q130–q139 drift
     // 1.5–2× between sessions with no code change, and the kNN/events
     // canaries don't capture ANN-kernel variability — a third isolated
@@ -201,11 +204,12 @@ object Bench {
         "q132_ivfpq_topk").flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
         val ts = (1 to 3).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok = try { materialize(fn(spark, sfDir)); true }
-                   catch { case _: Throwable => false }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
+          val (ok, dt) = Boundary.scoped {
+            val t0 = System.nanoTime()
+            val ok = try { materialize(fn(spark, sfDir)); true }
+                     catch { case _: Throwable => false }
+            (ok, (System.nanoTime() - t0) / 1e9)
+          }
           if (ok) Some(dt) else None
         }
         name.takeWhile(_ != '_') -> ts.minOption.getOrElse(-1.0)

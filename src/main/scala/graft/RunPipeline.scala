@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** The production entry point — the Spark twin of the reference's Dataflow
   * run (pipeline.py:318-360) and Cloud Function trigger
@@ -100,10 +101,12 @@ object RunPipeline {
   }
 
   /** One adjustment job over an explicit date scope — shared by the batch
-    * CLI above and the streaming driver ([[RunPipelineStream]]). */
+    * CLI above and the streaming driver ([[RunPipelineStream]]). Every
+    * boundary the job takes is released when it returns, so a long-lived
+    * session (one stream batch per day) accumulates none. */
   def runForDates(spark: SparkSession, consentPath: String, noconsentPath: String,
                   outDir: String, strategy: MatchStrategy, dates: Seq[String],
-                  metric: DistanceMetric = Manhattan): Unit = {
+                  metric: DistanceMetric = Manhattan): Unit = Boundary.scoped {
     val cfg = cliConfig.copy(metric = metric)
 
     val consentRaw = spark.read.parquet(consentPath)
@@ -164,7 +167,7 @@ object RunPipeline {
     // The summary aggregation feeds both the CSV write and the zero-match
     // warning below; cache it so the (noconsent scan + matched agg) DAG runs
     // once, not once per consumer.
-    val summary = result.summary.persist()
+    val summary = Boundary.pin(result.summary)
     Io.writeCsvExact(summary, cfg.dateCol, outDir, "adjustments_summary.csv")
     // reference parity: warn when a cohort matched nothing (radius too
     // tight — nearest_consented_customers.py:176-182 logs the same).
@@ -175,7 +178,6 @@ object RunPipeline {
       .foreach(r => System.err.println(
         s"[pipeline] WARNING: no matching customers for ${r.get(0)} — " +
           "no conversion values redistributed (radius too small?)"))
-    summary.unpersist()
     println(s"[pipeline] wrote ${dates.size} date(s) to $outDir")
   }
 }

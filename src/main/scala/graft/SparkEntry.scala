@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Curation, Dedup, EventOps, Multimodal, Packing, Profile, QualityModel, Sampling, Similarity, TextAnalysis, TextSql}
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Driver contract — one entry per operator from SURVEY.md §2, each with a
   * DuckDB-equivalent oracle SQL over the same parquet tables. Column names
@@ -124,12 +125,12 @@ object SparkEntry {
     // curation chain scans its corpus ~4× (minhash sets, decontam train +
     // benchmark shingles, the dedup re-attach) and each scan would re-run
     // the interpreted 100-token clone transform. Freed by the harness
-    // clearCache like every gate pin.
+    // scope like every gate pin.
     (d0.unionByName(clones)
-       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+       .transform(Boundary.pin),
       e0.unionByName(e0.filter(col("vec_id") % 10 === 0)
         .withColumn("vec_id", col("vec_id") + lit(1000000L)))
-       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+       .transform(Boundary.pin))
   }
 
   /** q127/q141 shared oracle prefix over the planted-clone corpus: the
@@ -3696,7 +3697,7 @@ object SparkEntry {
       (s: SparkSession, dir: String) => {
         val d = Cohorts.documents(s, dir)
         val merges = TextAnalysis.bpeTrain(d, 6)
-        val path = s"/tmp/graft_bpe_artifact_${Integer.toHexString(dir.hashCode)}"
+        val path = artifactPath("bpe_artifact", dir)
         TextAnalysis.saveBpeMerges(merges, path)
         val pairs = TextAnalysis.mergePairs(TextAnalysis.loadBpeMerges(s, path))
         require(pairs.size == 6,
@@ -3745,7 +3746,7 @@ object SparkEntry {
           prevDocs.join(priorIds, "doc_id"),
           Cohorts.embeddings(s, dir)
             .join(priorIds.select(col("doc_id").as("vec_id")), "vec_id"))
-        val path = s"/tmp/graft_release_index_${Integer.toHexString(dir.hashCode)}"
+        val path = artifactPath("release_index", dir)
         Io.writeReleaseIndex(ix, path)
         Curation.deltaReleaseAssignments(prevAssign, prevDocs, curDocs,
           curEmb, deltaTokenBudget = 3000, packBudget = 256, packShards = 2,
@@ -3847,14 +3848,10 @@ object SparkEntry {
         // (prevHead agg + retained join) — each would re-run its lazy
         // admission tail. A real weekly loop persists the assignment to
         // parquet between generations (the x_delta probes do exactly
-        // that); here the in-session equivalent is one flat materialized
-        // boundary. Same for the in-memory prior index relations, which
-        // the gen-1 re-cut's cross legs and updateReleaseIndex both
-        // consume and which a deployment restores from parquet anyway
-        // (q148).
-        def m(df: DataFrame): DataFrame = org.apache.spark.sql.graftbridge
-          .Bridge.materializedAuto(df,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // that); here the in-session equivalent is one staged boundary.
+        // Same for the in-memory prior index relations, which the gen-1
+        // re-cut's cross legs and updateReleaseIndex both consume and which
+        // a deployment restores from parquet anyway (q148).
         // Shared prep across the generation chain (VERDICT r14 #1):
         //  - the gen-1 re-cut runs AGAINST ix0 (bit-identical results —
         //    q147 and q148 pin indexed ≡ non-indexed on this very fixture
@@ -3873,20 +3870,21 @@ object SparkEntry {
             .join(priorIds.select(col("doc_id").as("vec_id")), "vec_id"))
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
+        import Boundary.executionContext
         val ix0F = Future(graft.ops.ReleaseDedupIndex(
-          m(ix0raw.lexical), m(ix0raw.semantic), ix0raw.meta))
-        val statusF = Future(m(graft.ops.Profile.corpusDelta(
+          Boundary.stage(ix0raw.lexical), Boundary.stage(ix0raw.semantic),
+          ix0raw.meta))
+        val statusF = Future(Boundary.stage(graft.ops.Profile.corpusDelta(
           prevDocs, curDocs, "doc_id", Seq("text"))))
         val ix0 = Await.result(ix0F, Duration.Inf)
         val status01 = Await.result(statusF, Duration.Inf)
-        val d1 = m(Curation.deltaReleaseAssignments(prevAssign,
+        val d1 = Boundary.stage(Curation.deltaReleaseAssignments(prevAssign,
           prevDocs, curDocs, curEmb, deltaTokenBudget = 3000,
           packBudget = 256, packShards = 2, outShards = 4,
           index = Some(ix0), sharedDelta = Some(status01)))
         val ix1 = Curation.updateReleaseIndex(ix0, d1, prevDocs, curDocs,
           curEmb, sharedDelta = Some(status01))
-        val path = s"/tmp/graft_gen2_index_${Integer.toHexString(dir.hashCode)}"
+        val path = artifactPath("gen2_index", dir)
         Io.writeReleaseIndex(ix1, path)
         val (cur2Docs, cur2Emb) = gen2DeltaFixture(s, dir, curDocs, curEmb)
         Curation.deltaReleaseAssignments(d1, curDocs, cur2Docs, cur2Emb,
@@ -3897,6 +3895,19 @@ object SparkEntry {
       Some(gen2ReleaseOracleSql))
   )
 
+  /** Where the queries that round-trip an artifact through storage (q146,
+    * q148, q153) write it: a fresh temporary directory per JVM, deleted at
+    * exit, so concurrent Verify and Bench runs over one sf directory never
+    * share a path. */
+  private lazy val scratchDir: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft-artifacts-").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+    d.getPath
+  }
+
+  private def artifactPath(kind: String, dir: String): String =
+    s"$scratchDir/${kind}_${Integer.toHexString(dir.hashCode)}"
+
   /** q147/q148 shared fixture: the q137 churn snapshots plus planted
     * delta clones (cross clones carry retained docs' embeddings, within-
     * delta pairs carry removed docs' embeddings) and a simple modular
@@ -3905,7 +3916,7 @@ object SparkEntry {
     * benchmark, retained re-attach, fresh source join) and the
     * clone-union construction (an interpreted 100-token transform per
     * clone row) would otherwise re-run per scan — fixture tooling, freed
-    * by the harness clearCache like every gate pin. */
+    * by the harness scope like every gate pin. */
   private def deltaReleaseFixture(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val d0 = Cohorts.documents(s, dir)
@@ -3926,12 +3937,12 @@ object SparkEntry {
       .unionByName(clones(1L, 1000000L))
       .unionByName(clones(3L, 2000000L))
       .unionByName(clones(3L, 3000000L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val curEmb = e0
       .unionByName(cloneEmb(1L, 1000000L))
       .unionByName(cloneEmb(3L, 2000000L))
       .unionByName(cloneEmb(3L, 3000000L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     // prior release fixture: every non-benchmark prev doc, packed by a
     // simple modular rule with a deterministic hash-ordered pack shuffle —
     // the operator contract only needs the assignment SCHEMA (the
@@ -3950,7 +3961,7 @@ object SparkEntry {
     val prevAssign = pbase.join(ppos, "pack_key")
       .select("doc_id", "lang", "shard", "tokens", "pack_id", "pack_key",
         "source", "shuffle_pos", "out_shard")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     (prevDocs, curDocs, curEmb, prevAssign)
   }
 
@@ -3982,12 +3993,12 @@ object SparkEntry {
       .unionByName(clones(7L, 4000000L))
       .unionByName(clones(9L, 5000000L))
       .unionByName(clones(9L, 6000000L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val emb2 = curEmb
       .unionByName(cloneEmb(7L, 4000000L))
       .unionByName(cloneEmb(9L, 5000000L))
       .unionByName(cloneEmb(9L, 6000000L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     (cur2, emb2)
   }
 

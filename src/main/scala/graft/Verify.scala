@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Boundary
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,15 +26,20 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      // queries take boundaries (q13/q18 pairs, q26 shingle sets); the
+      // scope releases them so ~150 queries' worth of blocks never squeeze
+      // execution memory for later ones
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      Boundary.scoped {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-      // queries persist intermediates (q13/q18 pairs, q26 shingle sets);
-      // Dataset caches are only freed explicitly — don't let ~45 queries'
-      // worth of pinned blocks squeeze execution memory for later ones
-      spark.catalog.clearCache()
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      if (left.nonEmpty)
+        System.err.println(s"[verify] $name left ${left.size} persisted RDD(s) behind")
     }
     // Learned-literal oracles (q44) refit their model on this sf dir when
     // generating SQL — set before the oracleSql dump below.

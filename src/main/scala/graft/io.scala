@@ -316,35 +316,37 @@ object Io {
     // sequentially) so each leg's straggler/commit tail back-fills the
     // other: wall ≈ max(leg) instead of sum.
     //
-    // Each leg is materialized first (Bridge.materialized — the write then
-    // streams blocks instead of recomputing the union/semi-join lineage, a
-    // wash cost-wise) so the MEASURED footprint can size the output files
-    // (guide §6: aim for 100 MB–1 GB files, never shuffle-partition-count
-    // shards of a few KB): coalesce to ceil(bytes / target), capped at the
-    // plan's own partition count — scale-adaptive by construction, a
-    // corpus-sized index keeps its full write parallelism.
+    // Each leg is staged first (the write then streams blocks instead of
+    // recomputing the union/semi-join lineage, a wash cost-wise) so the
+    // MEASURED footprint can size the output files (guide §6: aim for
+    // 100 MB–1 GB files, never shuffle-partition-count shards of a few
+    // KB): coalesce to ceil(bytes / target), capped at the plan's own
+    // partition count — scale-adaptive by construction, a corpus-sized
+    // index keeps its full write parallelism. The scope releases both
+    // legs once written.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import org.apache.spark.sql.graftbridge.Boundary
+    import Boundary.executionContext
     def writeLeg(df: DataFrame, path: String): Unit = {
-      val (out, rdd) = org.apache.spark.sql.graftbridge.Bridge.materialized(df)
-      try {
-        val n = outputPartitionsFor(
-          org.apache.spark.sql.graftbridge.Bridge.storageBytes(rdd),
-          rdd.getNumPartitions)
-        out.coalesce(n).write.mode("overwrite").parquet(path)
-      } finally rdd.unpersist(blocking = false)
+      val out = Boundary.stage(df)
+      val n = outputPartitionsFor(
+        out.queryExecution.analyzed.stats.sizeInBytes.toLong,
+        out.rdd.getNumPartitions)
+      out.coalesce(n).write.mode("overwrite").parquet(path)
     }
-    val legs = Seq(
-      Future(writeLeg(index.lexical, s"$dir/lex-index.parquet")),
-      Future(writeLeg(index.semantic, s"$dir/sem-index.parquet")))
-    // Await BOTH legs before surfacing a failure (ADVICE r14): Await.result
-    // on the first future rethrows while the sibling write may still be
-    // mutating its output path — a caller's cleanup/retry would then race
-    // a detached in-flight job. Await.ready never throws; the result pass
-    // after it surfaces the first failure with nothing left running.
-    legs.foreach(Await.ready(_, Duration.Inf))
-    legs.foreach(Await.result(_, Duration.Inf))
+    Boundary.scoped {
+      val legs = Seq(
+        Future(writeLeg(index.lexical, s"$dir/lex-index.parquet")),
+        Future(writeLeg(index.semantic, s"$dir/sem-index.parquet")))
+      // Await BOTH legs before surfacing a failure (ADVICE r14): Await.result
+      // on the first future rethrows while the sibling write may still be
+      // mutating its output path — a caller's cleanup/retry would then race
+      // a detached in-flight job. Await.ready never throws; the result pass
+      // after it surfaces the first failure with nothing left running.
+      legs.foreach(Await.ready(_, Duration.Inf))
+      legs.foreach(Await.result(_, Duration.Inf))
+    }
     index.meta.foreach { m =>
       val conf = index.lexical.sparkSession.sessionState.newHadoopConf()
       val p = new Path(s"$dir/index-meta.csv")

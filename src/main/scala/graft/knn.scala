@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Shape of a prepared cohort fed to the neighbor join: both sides must
   * share it (the reference hard-checks identical feature columns,
@@ -509,8 +510,7 @@ object NeighborJoin {
     * cut q16 5.7 → 2.6 s and q58 3.8 → 2.8 s steady-state. The cached
     * relation is the NARROW projection (id, value, features, x, cohort) —
     * column-pruned well below the source table — and spills to disk at
-    * scale; callers free it via clearCache/ContextCleaner like every other
-    * internal persist in this engine.
+    * scale.
     *
     * With NO cohort scope a bare window would funnel all rows through one
     * task, so the global forms switch to the range-partitioned zipWithIndex
@@ -532,15 +532,15 @@ object NeighborJoin {
         raise_error(lit(s"topKBanded: null/NaN numeric feature '$x' — " +
           "clean the cohort or use the validated matcher route")))
         .otherwise(col(s"$p$x")))
-    // The persist sits UNDER the guard: the cached relation is the plain
+    // The pin sits UNDER the guard: the cached relation is the plain
     // prefixed projection, so the percentile pipeline's pass-2 radius join
     // (which builds the identical unguarded projection) hits this cache by
     // plan equality instead of re-deriving cohort prep from source. The
     // guard itself is a per-row branch over the cached scan — free.
     val c0 = guardX("c_", prefixed(consent, spec, "c_")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .transform(Boundary.pin))
     val nc0 = guardX("nc_", prefixed(noconsent, spec, "nc_")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .transform(Boundary.pin))
 
     // consent rows ranked by x within each cohort (0-based zipWithIndex in
     // the global form, hence the +1)
@@ -647,7 +647,7 @@ object NeighborJoin {
     val bound = spec.metric.bandBound.getOrElse(
       throw new IllegalStateException(
         s"metric ${spec.metric.name} has no band bound — callers fall back dense"))
-    // PERSISTED for the same reason as the cosine probesD: ncD feeds the
+    // PINNED for the same reason as the cosine probesD: ncD feeds the
     // widths aggregate AND the banded probe side, and its lineage holds
     // the dxK endpoint derivation (two joins against the rank relation).
     // O(|NC|) narrow rows; an r5 note measured this pin as neutral at
@@ -655,7 +655,7 @@ object NeighborJoin {
     val ncD = joinCoh(nc0.join(dxK, joinKeys), cStats)
       .withColumn("__b0", size(col("nc_features")) + col("__cmaxtok"))
       .withColumn("__r", bound(col("__d"), col("__b0")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val widths = ncD.groupBy(coh.map(col(_)): _*)
       .agg(greatest(percentile_approx(col("__r"), lit(0.99), lit(1000)),
         lit(1e-6)).as("__w"),
@@ -844,7 +844,7 @@ object NeighborJoin {
     val a2 = xa * xa - c2
     val m = col("__cmintok").cast("double")
     val disc = c2 * (A * A + m * a2)
-    // PERSISTED: probesD feeds both the widths aggregate and the banded
+    // PINNED: probesD feeds both the widths aggregate and the banded
     // probe side, and its lineage carries the whole phase-1 d_k subtree
     // (the ±max(k,16) explode + per-probe sort-agg). Without the pin each
     // consumer re-evaluates that subtree — measured at the 10× replica as
@@ -861,7 +861,7 @@ object NeighborJoin {
       .withColumn("__ihi", greatest(col("__r1"), col("__r2")) + col("__pad"))
       .withColumn("__r", (col("__ihi") - col("__ilo")) / lit(2.0))
       .drop("__r1", "__r2", "__pad", "__lo", "__hi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
 
     // the same conditional two-tier single equi-join as topKBandedImpl:
     // W = p99 of the non-wild interval half-widths; wild or wider-than-W

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Curation v2 — the end-to-end modern pretraining-data pipeline as ONE
   * declarative plan, composing the separately-gated operators:
@@ -28,16 +28,10 @@ import org.apache.spark.storage.StorageLevel
   * verification, with recall guaranteed at ANY threshold rather than the
   * SRP curve.
   *
-  * Cache contract: stage 1 (the lexical-curation survivor set) is pinned
-  * MEMORY_AND_DISK because three downstream consumers (the induced pair
-  * graph, the quality projection, the budget input) would each recompute
-  * the whole MinHash + decontamination lineage otherwise. The pin must
-  * outlive the RETURNED frame's evaluation (it is consumed lazily), so the
-  * CALLER frees it after materializing the result —
-  * `spark.catalog.clearCache()`, the verify/bench harness discipline, or
-  * targeted unpersist in a long-lived session. Same contract as
-  * [[Dedup]]'s persisted shingle sets and [[Similarity.pqTopK]]'s code
-  * index.
+  * Stage 1 (the lexical-curation survivor set) is pinned because three
+  * downstream consumers (the induced pair graph, the quality projection,
+  * the budget input) would each recompute the whole MinHash +
+  * decontamination lineage otherwise.
   */
 /** The build parameters a [[ReleaseDedupIndex]] was computed under — the
   * artifact's self-describing metadata (ADVICE r13 medium): the MinHash
@@ -70,16 +64,6 @@ final case class ReleaseDedupIndex(lexical: DataFrame, semantic: DataFrame,
                                    meta: Option[IndexMeta] = None)
 
 object Curation {
-
-  /** Eager flat-plan stage boundary (the [[deltaReleaseAssignments]] body
-    * discipline, shared): materialize into an RDD-backed copy whose blocks
-    * the ContextCleaner frees once the frame is discarded. Used on id- or
-    * delta-sized relations that feed MULTIPLE downstream consumers — each
-    * consumer would otherwise re-run the whole upstream lineage (noop/
-    * write actions do not cache). */
-  private def mat(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.Bridge
-      .materializedAuto(df, StorageLevel.MEMORY_AND_DISK)
 
   /** Build the [[ReleaseDedupIndex]] for a corpus being shipped — run it
     * over the RELEASE's docs/embeddings at release-build time, write with
@@ -126,7 +110,7 @@ object Curation {
     * the prior index's [[IndexMeta]] — a mismatch would union
     * incompatible signatures and silently under-dedup. */
   /** `sharedDelta`: the weekly loop's re-cut already computed (and the
-    * caller typically materialized) exactly the
+    * caller typically staged) exactly the
     * `Profile.corpusDelta(prevDocs, curDocs, "doc_id", Seq("text"))`
     * status frame this update needs — pass it to skip the two corpus-
     * sized fingerprint re-scans (the [[graft.ops.Profile
@@ -149,11 +133,11 @@ object Curation {
     // both fresh semi-joins; reuseIds: both kept semi-joins, and through
     // them both fresh anti-joins). `newAssign` is typically the LAZY tail
     // of a delta re-cut and corpusDelta re-scans two corpus snapshots —
-    // materialize each ONCE (id-sized blocks, ContextCleaner-freed) so the
-    // artifact write pays one evaluation per input, not one per consumer
-    // (measured on the q153 gate: updateReleaseIndex + write dropped ~2×).
-    val ids = mat(newAssign.select("doc_id"))
-    val reuseIds = mat(ids.join(
+    // stage each ONCE (id-sized) so the artifact write pays one evaluation
+    // per input, not one per consumer (measured on the q153 gate:
+    // updateReleaseIndex + write dropped ~2×).
+    val ids = Boundary.stage(newAssign.select("doc_id"))
+    val reuseIds = Boundary.stage(ids.join(
       sharedDelta.getOrElse(
           Profile.corpusDelta(prevDocs, curDocs, "doc_id", Seq("text")))
         .filter(col("status") === "unchanged").select("doc_id"),
@@ -202,7 +186,7 @@ object Curation {
     val stage1 = modelFloor
       .foldLeft(lexical)((df, f) =>
         df.filter(TextAnalysis.modelQualityScore(col("text")) >= f))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     // SemDeDup over the SURVIVORS' embeddings only (the induced pair
     // graph): dedupe among the docs being kept — the correct curation
     // semantics, and the candidate volume scales with the survivor set,
@@ -257,8 +241,8 @@ object Curation {
     * plans (their shuffles are the irreducible cost); everything after
     * packing operates on the PACK relation (|selected docs| / docs-per-pack
     * rows) and the manifest folds are outShards-sized. The one pin is
-    * stage 1 (see the cache contract above); nothing else is persisted or
-    * collected beyond the operators' own sanctioned 1-row scalars.
+    * stage 1 (see above); nothing else is pinned or collected beyond the
+    * operators' own sanctioned 1-row scalars.
     *
     * Output: (out_shard, n_packs, n_docs, n_tokens, source_mix), one row
     * per non-empty output shard. */
@@ -278,11 +262,11 @@ object Curation {
                       exactSemantic: Boolean = false,
                       contamShingleK: Int = 8): DataFrame = {
     // the manifest fold scans the assignment twice (per-source stats +
-    // the distinct pack-key count) — materialize the doc-level frame once
+    // the distinct pack-key count) — stage the doc-level frame once
     // for this manifest-only caller (narrow rows; the WRITE path instead
     // streams the same frame to parquet shards and folds the manifest
     // from it there, graft.Io.writeReleaseShards)
-    selectManifest(mat(releaseAssignments(docs, embeddings, tokenBudget,
+    selectManifest(Boundary.stage(releaseAssignments(docs, embeddings, tokenBudget,
       packBudget, packShards, outShards, alpha, mixSeed, shuffleSeed,
       minhashThreshold, benchmarkSource, qualityFloor, modelFloor,
       semanticThreshold, exactSemantic, contamShingleK)))
@@ -317,9 +301,9 @@ object Curation {
     // kept feeds FOUR scans (temperatureSample's count pass + its join
     // back, tokenBudgetSelect's range-partitioner sample + its real pass)
     // — without a boundary each re-runs the SemDeDup window + quality
-    // projection. Flat-materialized (selected-docs-sized rows,
-    // ContextCleaner-freed), the deltaReleaseAssignments discipline.
-    val kept = mat(stage1.join(semKeepers, "doc_id"))
+    // projection. Staged (selected-docs-sized rows), the
+    // deltaReleaseAssignments discipline.
+    val kept = Boundary.stage(stage1.join(semKeepers, "doc_id"))
     val mixed = Sampling.temperatureSample(kept, "lang", "doc_id", alpha, mixSeed)
     val sel = Sampling.tokenBudgetSelect(mixed, tokenBudget)
     // J3 re-attach against the pinned survivor frame: packing needs text
@@ -330,7 +314,7 @@ object Curation {
     val packKey = concat_ws("/", col("lang"), col("shard"), col("pack_id"))
     // consumed twice (the distinct pack-key shuffle relation + the final
     // re-attach) — each would re-run the packing repartition+sort pass
-    val packRel = mat(packs.withColumn("pack_key", packKey))
+    val packRel = Boundary.stage(packs.withColumn("pack_key", packKey))
     val assigned = Sampling
       .shuffleOrder(packRel.select("pack_key").distinct(), "pack_key", shuffleSeed)
       .withColumn("out_shard", pmod(col("shuffle_pos"), lit(outShards.toLong)))
@@ -393,10 +377,9 @@ object Curation {
     * bucket/SRP pass over the retained side for the cross joins, linear
     * and shuffle-light), and packing/shuffle/manifest are delta-pack-
     * sized: cost scales with the CHANGE, not the corpus (measured in
-    * DESIGN §10's replica table). Stage boundaries are eagerly
-    * materialized into flat-plan RDD-backed copies (see the body
-    * comment) — delta-/id-sized blocks, freed by the ContextCleaner once
-    * the returned frame is discarded.
+    * DESIGN §10's replica table). Stage boundaries are eager
+    * [[org.apache.spark.sql.graftbridge.Boundary.stage]] copies (see the
+    * body comment) of delta-/id-sized relations.
     *
     * Output: the same doc-level assignment schema as
     * [[releaseAssignments]] — retained rows ∪ newly packed rows — ready
@@ -449,31 +432,26 @@ object Curation {
         s"${prevHead.getLong(1)} prior pack keys — each re-cut needs a " +
         "fresh generation label or new pack_keys would collide with " +
         "shipped packs")
-    // Stage boundaries are EAGERLY MATERIALIZED into RDD-backed flat-plan
-    // copies ([[org.apache.spark.sql.graftbridge.Bridge.materialized]],
-    // the dedupClusters discipline) rather than plain persist()ed: the
-    // chain is ~10 composed operators deep and each boundary's logical
-    // plan would otherwise EMBED every upstream boundary's full tree —
-    // the tree doubles per stage, and Spark renders the whole analyzed
-    // plan to a string per action (SparkListenerSQLExecutionStart), which
-    // measured ~88 s of DRIVER time per run at sf0.1 (jstack: all samples
-    // in TreeNode.generateTreeString) against ~17 s of actual stage wall.
+    // Stage boundaries are STAGED (eager, flat plan — the dedupClusters
+    // discipline) rather than pinned: the chain is ~10 composed operators
+    // deep and each boundary's logical plan would otherwise EMBED every
+    // upstream boundary's full tree — the tree doubles per stage, and
+    // Spark renders the whole analyzed plan to a string per action
+    // (SparkListenerSQLExecutionStart), which measured ~88 s of DRIVER
+    // time per run at sf0.1 (jstack: all samples in
+    // TreeNode.generateTreeString) against ~17 s of actual stage wall.
     // The flat LogicalRDD leaves keep every downstream plan
     // boundary-sized, and the eager count means the chain's eager
     // internals (driver union-find, running-sum offsets, zipWithIndex)
-    // read blocks instead of re-running the admission prefix. All
-    // materialized relations are delta- or id-sized. Blocks are
-    // RDD-level: spark.catalog.clearCache() does NOT free them — they are
-    // freed by the ContextCleaner once the returned frame is discarded
-    // (the verify/bench lifecycle), or by a caller holding no reference.
-    // (`mat` is the object-level shared helper.)
+    // read blocks instead of re-running the admission prefix. All staged
+    // relations are delta- or id-sized.
     // `sharedDelta` (same contract as updateReleaseIndex / sourceStatsDelta):
-    // a caller that already computed-and-materialized THIS corpusDelta
+    // a caller that already computed-and-staged THIS corpusDelta
     // frame passes it in, skipping the chain's two corpus-sized fingerprint
     // scans — the caller guarantees it equals the expression below.
-    val status = sharedDelta.getOrElse(mat(
+    val status = sharedDelta.getOrElse(Boundary.stage(
       Profile.corpusDelta(prevDocs, curDocs, "doc_id", Seq("text"))))
-    val retained = mat(prevAssign.join(
+    val retained = Boundary.stage(prevAssign.join(
       status.filter(col("status") === "unchanged").select("doc_id"), "doc_id"))
     // the shipped docs the delta dedups against, with their (identical-
     // by-definition) current text
@@ -489,11 +467,11 @@ object Curation {
     val contamIds = Dedup.contaminated(floored,
         curDocs.filter(col("source") === benchmarkSource), contamShingleK)
       .select("doc_id")
-    val cand = mat(floored.join(contamIds, Seq("doc_id"), "left_anti"))
+    val cand = Boundary.stage(floored.join(contamIds, Seq("doc_id"), "left_anti"))
     // Cross legs: with a restored [[ReleaseDedupIndex]] the retained side
     // is the persisted artifact filtered to the retained ids (id-keyed
     // semi-join) — identical results, no corpus re-hash per re-cut.
-    val lexSurv = mat(index match {
+    val lexSurv = Boundary.stage(index match {
       case Some(ix) => Dedup.newAgainstLexIndexAndSelf(cand,
         ix.lexical.join(retained.select("doc_id"), "doc_id"),
         minhashThreshold)
@@ -512,14 +490,14 @@ object Curation {
           retained.select(col("doc_id").as("vec_id")), "vec_id")
         Similarity.semanticContaminatedLsh(lexEmb, retEmb, semanticThreshold)
     }).select("doc_id")
-    val semCross = mat(lexSurv.join(semHits, Seq("doc_id"), "left_anti"))
+    val semCross = Boundary.stage(lexSurv.join(semHits, Seq("doc_id"), "left_anti"))
     val semEmb = curEmbeddings.join(
       semCross.select(col("doc_id").as("vec_id")), "vec_id")
     // admitted has ONE consumer (the budget cut), whose running-sum
     // primitive pins its own input across the range-sampling double pass —
-    // a mat() here would only add a redundant materialization job (the
-    // SemDeDup labels behind the keep relation are already eager and
-    // RDD-backed, so the plan stays boundary-sized without it)
+    // a stage here would only add a redundant job (the SemDeDup labels
+    // behind the keep relation are already staged, so the plan stays
+    // boundary-sized without it)
     val admitted = semCross.join(
       Similarity.semanticDedupLsh(semCross, semEmb, semanticThreshold)
         .filter(col("keep") === 1).select("doc_id"), "doc_id")
@@ -529,7 +507,7 @@ object Curation {
       .toDF()
     val packKey = concat_ws("/", lit(generation), col("lang"), col("shard"),
       col("pack_id"))
-    val packRel = mat(packs.withColumn("pack_key", packKey))
+    val packRel = Boundary.stage(packs.withColumn("pack_key", packKey))
     val assigned = Sampling
       .shuffleOrder(packRel.select("pack_key").distinct(), "pack_key",
         shuffleSeed)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Deduplication operators over a `documents(doc_id, text, …)` table:
   *
@@ -249,12 +250,10 @@ object Dedup {
   def minHashPairs(docs: DataFrame, threshold: Double, k: Int = 3): DataFrame = {
     // Shingle hashing (codegen'd, but over every character) is the dominant
     // per-doc cost and the sets feed three consumers (signatures + both
-    // sides of the verify join) — materialize once. The cache stays pinned
-    // while the returned (lazy) frame is alive; callers' clearCache /
-    // ContextCleaner free it.
+    // sides of the verify join) — materialize once.
     val sets = shingleSets(docs, k)
       .filter(size(col("shingles")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val buckets = minHashBuckets(sets, threshold)
     val candidates = buckets.as("x").join(buckets.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
@@ -282,9 +281,9 @@ object Dedup {
   def newAgainstIndex(newDocs: DataFrame, indexDocs: DataFrame,
                       threshold: Double, k: Int = 3): DataFrame = {
     val setsN = shingleSets(newDocs, k).filter(size(col("shingles")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val setsI = shingleSets(indexDocs, k).filter(size(col("shingles")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val candidates = minHashBuckets(setsN, threshold).as("x")
       .join(minHashBuckets(setsI, threshold).as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
@@ -341,11 +340,11 @@ object Dedup {
   def newAgainstLexIndexAndSelf(newDocs: DataFrame, lexIndex: DataFrame,
                                 threshold: Double, k: Int = 3): DataFrame = {
     val setsN = shingleSets(newDocs, k).filter(size(col("shingles")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val setsI = lexIndex
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val bkN = minHashBuckets(setsN, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val crossCand = bkN.as("x")
       .join(bucketsFromSig(setsI.select("doc_id", "sig"), threshold).as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
@@ -361,7 +360,7 @@ object Dedup {
       .filter(col("inter") /
         (size(col("sa")) + size(col("sb")) - col("inter")) >= threshold)
       .select(col("doc_a").as("doc_id")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val withinCand = bkN.as("x").join(bkN.as("y"),
         col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -564,8 +563,6 @@ object Dedup {
     * path the threshold selects. */
   def dedupClusters(pairs: DataFrame, maxIter: Int = 25,
                     driverThreshold: Long = 4000000L): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Both orientations from ONE scan: `pairs` is typically a whole LSH
     // candidate+verify pipeline, and a self-union would plan (and run) that
     // pipeline twice — ReuseExchange only dedupes the shuffle stages, not
@@ -574,19 +571,17 @@ object Dedup {
         struct(col("doc_a").as("u"), col("doc_b").as("v")),
         struct(col("doc_b").as("u"), col("doc_a").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct().persist(lvl)
+      .distinct().transform(Boundary.pin)
     val longIds = edges.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
     if (longIds && edges.count() <= driverThreshold)
       return unionFindLocal(edges, driverThreshold)
-    // Each round is eagerly materialized into an RDD-backed copy
-    // (Bridge.materialized): the flat LogicalRDD plan doesn't deepen by two
-    // joins per iteration, and — unlike Dataset.localCheckpoint, whose
-    // internal persist neither unpersist() nor clearCache() can reach — the
-    // previous round's blocks are freed deterministically below.
-    var (labels, labelsRdd) = Bridge.materialized(
+    // Each round is staged: the flat plan doesn't deepen by two joins per
+    // iteration, and the previous round is released as soon as the next
+    // one is staged.
+    var labels = Boundary.stage(
       edges.select(col("u").as("doc_id")).distinct()
-        .withColumn("cluster_id", col("doc_id")), lvl)
+        .withColumn("cluster_id", col("doc_id")))
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
@@ -595,7 +590,7 @@ object Dedup {
         .groupBy(col("u").as("doc_id"))
         .agg(min("nl").as("nbr"))
       // carry the previous label through the round so convergence reads off
-      // the same materialized relation — no extra join per round
+      // the same staged relation — no extra join per round
       val stepped = labels.join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("cluster_id"), coalesce(col("nbr"), col("cluster_id")))
@@ -612,27 +607,24 @@ object Dedup {
       // job, a few joins over data this round already touched.
       val jumpTo = stepped
         .select(col("doc_id").as("__jkey"), col("mid").as("__jump"))
-      val (updated, updatedRdd) = Bridge.materialized(
+      val updated = Boundary.stage(
         stepped.join(jumpTo, col("mid") === col("__jkey"), "left")
           .select(col("doc_id"),
             least(col("mid"), coalesce(col("__jump"), col("mid")))
               .as("cluster_id"),
-            col("__old")), lvl)
+            col("__old")))
       // round 0 always changes (every multi-node cluster moves) — skip the
       // count job and only pay for convergence checks from round 1 on
       changed =
         if (it == 0) 1L
         else updated.filter(col("cluster_id") =!= col("__old")).count()
-      labelsRdd.unpersist(blocking = false)
-      labels = updated.drop("__old")
-      labelsRdd = updatedRdd
+      Boundary.release(labels)
+      labels = updated
       it += 1
     }
     require(changed == 0, s"label propagation did not converge in $maxIter rounds")
-    edges.unpersist()
-    // the final round's RDD stays persisted while the caller holds `labels`;
-    // ContextCleaner frees it once the reference is dropped
-    labels
+    Boundary.release(edges)
+    labels.drop("__old")
   }
 
   /** Driver-side union-find over a collected (long-id) edge list: ids are
@@ -653,7 +645,7 @@ object Dedup {
     require(arr.length <= bound,
       s"unionFindLocal collected ${arr.length} edges > driver bound $bound — " +
         "route this graph through label propagation")
-    edges.unpersist()
+    Boundary.release(edges)
     // every vertex appears on the u side (edges carry both orientations)
     val ids = arr.map(_._1)
     java.util.Arrays.sort(ids)
@@ -708,9 +700,9 @@ object Dedup {
   def clustersLsh(docs: DataFrame, threshold: Double, k: Int = 3): DataFrame = {
     val sets = shingleSets(docs, k)
       .filter(size(col("shingles")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     // hub = bucket min: a window aggregate, not a groupBy+collect — no
-    // bucket is ever materialized as one row however large the cluster.
+    // bucket is ever gathered into one row however large the cluster.
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "key")
     val star = minHashBuckets(sets, threshold)
       .withColumn("hub", min("doc_id").over(w))
@@ -719,10 +711,8 @@ object Dedup {
       .distinct()
     val labels =
       dedupClusters(verifyJaccard(star, sets, threshold).select("doc_a", "doc_b"))
-    // dedupClusters is EAGER (edge count + union-find / materialized
-    // rounds), so unlike minHashPairs' lazy return nothing references the
-    // shingle cache anymore — free it now rather than at session end.
-    sets.unpersist(blocking = false)
+    // dedupClusters is eager, so nothing references the shingle sets anymore
+    Boundary.release(sets)
     labels
   }
 

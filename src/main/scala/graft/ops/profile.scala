@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Data-quality profiling — the schema-audit pass a training-data pipeline
   * runs before trusting a new drop: per-column row/null/distinct counts in
@@ -245,11 +246,11 @@ object Profile {
     * standard corpus contract. */
   def sourceStatsDelta(prior: DataFrame, prevDocs: DataFrame,
                        curDocs: DataFrame,
-                       sharedDelta: Option[DataFrame] = None): DataFrame = {
+                       sharedDelta: Option[DataFrame] = None): DataFrame = Boundary.scoped {
     val delta = sharedDelta
       .getOrElse(corpusDelta(prevDocs, curDocs, "doc_id",
         Seq("text", "source")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val gone = delta.filter(col("status").isin("removed", "changed"))
       .select("doc_id")
     val came = delta.filter(col("status").isin("added", "changed"))
@@ -273,10 +274,9 @@ object Profile {
           + coalesce(col("a_c"), lit(0L))).as("n_chars"))
       .filter(col("n_docs") > 0)
     // the delta relation feeds two consumers (gone/came) — materialize the
-    // |sources|-row result, then free the pin: the monitor is
-    // self-contained like distributionDrift (no blocks accrete per call)
+    // |sources|-row result inside the scope: the monitor is self-contained
+    // like distributionDrift (no blocks accrete per call)
     val rows = out.collect()
-    delta.unpersist(blocking = false)
     prior.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), out.schema)
   }
@@ -302,13 +302,12 @@ object Profile {
     * count relations (≤ bins rows each) join broadcast. Degenerate
     * reference (min = max or empty) puts all mass in bin 0.
     *
-    * SELF-CONTAINED cache contract (VERDICT r13 "what's wrong" #2): the
-    * reference side's projected values (one double column) are pinned
-    * MEMORY_AND_DISK across its two consumers — the min/max head() and
-    * the reference binning fold, both of which run EAGERLY here — and
-    * unpersisted in a finally before this returns. Unlike the stage-1
-    * pin in [[graft.ops.Curation]], nothing the returned frame evaluates
-    * later touches the pin: the reference histogram is collected (a
+    * SELF-CONTAINED (VERDICT r13 "what's wrong" #2): the reference side's
+    * projected values (one double column) are pinned across its two
+    * consumers — the min/max head() and the reference binning fold, both
+    * of which run EAGERLY here — in a scope that releases the pin before
+    * this returns. Nothing the returned frame evaluates later touches the
+    * pin: the reference histogram is collected (a
     * ≤bins-row bounded collect, the frozen-histogram relation
     * [[distributionDriftStream]] takes as literals anyway) and re-enters
     * the plan as a literal map, so the monitor's natural deployment — an
@@ -323,11 +322,10 @@ object Profile {
       s"bins must be in [1, 100000] (the reference histogram is a " +
         s"driver-collected relation), got $bins")
     val spark = ref.sparkSession
-    val vals = ref.select(raw(valueCol).cast("double").as("__v"))
-      .filter(col("__v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (mn, w, refCounts) =
-      try {
+      Boundary.scoped {
+        val vals = Boundary.pin(ref.select(raw(valueCol).cast("double").as("__v"))
+          .filter(col("__v").isNotNull))
         val head = vals.agg(min(col("__v")).as("mn"), max(col("__v")).as("mx"))
           .head()
         val (mn0, mx0) =
@@ -342,7 +340,7 @@ object Profile {
           .groupBy("bin").agg(count(lit(1)).as("n"))
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         (mn0, w0, rc)
-      } finally vals.unpersist(blocking = false)
+      }
     val nRefTotal = refCounts.values.sum
     val curVals = cur.select(raw(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -290,8 +291,7 @@ object Similarity {
                               threshold: Double, bands: Int = 8,
                               seed: Long = 42L): DataFrame = {
     // each side evaluated + SRP-hashed ONCE for its three legs (band
-    // chunks, signature join, verify side); pins follow the module's
-    // lazy-return cache contract (caller clearCache / ContextCleaner)
+    // chunks, signature join, verify side)
     val t = semPrepped(train, seed)
     val b = semPrepped(benchmark, seed)
     val candBand = chunksOfSigs(t.select(col("id"), col("__sig")), bands).as("t")
@@ -543,7 +543,7 @@ object Similarity {
   def nearDupPairsLsh(corpus: DataFrame, threshold: Double,
                       bands: Int = 16, seed: Long = 42L): DataFrame = {
     // corpus evaluated + SRP-hashed once for the bucket self-join and both
-    // verify sides (semPrepped pin; lazy-return cache contract)
+    // verify sides (semPrepped pin)
     val pp = semPrepped(corpus, seed)
     val chunks = chunksOfSigs(pp.select(col("id"), col("__sig")), bands)
     val candidates = chunks.as("x").join(chunks.as("y"),
@@ -576,17 +576,14 @@ object Similarity {
     * pin each leg re-evaluates the input lineage (often a corpus ⋈
     * survivor-ids join) and re-runs the 64-projection SRP kernel
     * (guide §2.4 — the minHashPairs shingle-set discipline applied to the
-    * semantic family). Callers whose tail is EAGER (embedClustersLsh's
-    * components) unpersist before returning; lazy-returning operators
-    * leave the pin to the caller's clearCache / ContextCleaner, the
-    * module's documented cache contract. */
+    * semantic family). */
   private def semPrepped(corpus: DataFrame, seed: Long): DataFrame =
     prep(corpus, "").withColumn("__sig",
       org.apache.spark.sql.graftbridge.Bridge.column(
         graft.expr.CosineLshSig(
           org.apache.spark.sql.graftbridge.Bridge.expression(col("emb")),
           64, seed)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
 
   /** (id, band, chunk) band buckets from a relation already carrying the
     * 64-bit `__sig` — pure bit arithmetic, no per-vector kernel. */
@@ -666,8 +663,8 @@ object Similarity {
       .filter(col("sim") >= threshold)
     val labels = Dedup.dedupClusters(
       verified.select(col("a_id").as("doc_a"), col("b_id").as("doc_b")))
-    // dedupClusters is EAGER — nothing references the pin anymore
-    pp.unpersist(blocking = false)
+    // dedupClusters is eager — nothing references the pin anymore
+    Boundary.release(pp)
     labels
   }
 
@@ -796,25 +793,21 @@ object Similarity {
     * with c_id tie-break. The exact [[cosineTopK]] is the recall oracle —
     * audited with [[annRecall]] as the gated q134; the q130 gate pins the
     * whole encode→LUT→rank arithmetic against a generated DuckDB twin with
-    * the same learned codebook literals (the q44 discipline).
-    *
-    * Cache contract (one-shot form): the encoded code relation stays
-    * pinned after consumption — caller frees (`spark.catalog.clearCache()`);
-    * long-lived sessions use [[buildIvfPqIndex]]/[[AnnIndex.unpersist]]. */
+    * the same learned codebook literals (the q44 discipline). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
              m: Int = 8, kCents: Int = 16, seed: Long = 42L): DataFrame = {
     val books = pqCodebooks(corpus, m, kCents, seed)
     val d = books(0)(0).length
-    // PERSISTED: the encoded relation IS the PQ index — m codes per
+    // PINNED: the encoded relation IS the PQ index — m codes per
     // vector, built once and stored (that's the operator's whole point).
     // Without the pin, CollapseProject inlines the encode expression
     // (m·kCents literal-centroid dots per row) into the join's output
     // projection and it re-runs PER CANDIDATE PAIR — measured 2,500
     // task-seconds for the 50M-pair 10× replica scan vs ~25 with the
-    // index materialized. Cache size is |corpus| × m ints.
+    // index pinned. Cache size is |corpus| × m ints.
     val enc = prep(corpus, "c_")
       .select(col("c_id"), pqCodesCol(col("c_emb"), books).as("codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val lut = array(books.indices.map(mi =>
       array(books(mi).indices.map(c =>
         dotD(slice(col("q_emb"), mi * d + 1, d), lit(books(mi)(c)))): _*)): _*)
@@ -908,14 +901,9 @@ object Similarity {
     * deterministic ([[ivfCentroids]] seeded spark.ml fit; [[pqCodebooks]]
     * seeded local Lloyd), so the generated q132 oracle replays them as
     * literals; recall/rank fidelity is audited with [[annRecall]] /
-    * [[rankingMetrics]] (q134/q135) like every ANN path.
-    *
-    * Cache contract (one-shot form): the encoded index relation stays
-    * pinned MEMORY_AND_DISK after the returned frame is consumed — the
-    * CALLER frees it (`spark.catalog.clearCache()`, the verify/bench
-    * harness discipline). A long-lived session that searches repeatedly or
-    * ingests new vectors should hold the [[buildIvfPqIndex]] handle
-    * instead and `AnnIndex.unpersist()` when done. */
+    * [[rankingMetrics]] (q134/q135) like every ANN path. A long-lived
+    * session that searches repeatedly or ingests new vectors should hold
+    * the [[buildIvfPqIndex]] handle instead. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nCells: Int = 16, nProbe: Int = AnnNProbe,
                 m: Int = 8, kCents: Int = 16, seed: Long = 42L,
@@ -947,15 +935,14 @@ object Similarity {
     * relation(s): [[AnnIndex.search]] runs queries against it,
     * [[AnnIndex.append]] ingests new vectors against the FROZEN quantizers
     * without touching the existing index, [[AnnIndex.unpersist]] releases
-    * every pinned relation — the cache-lifecycle contract the one-shot
-    * [[ivfPqTopK]]/[[pqTopK]] forms leave to the caller. */
+    * every pinned relation. */
   def buildIvfPqIndex(corpus: DataFrame, nCells: Int = 16, m: Int = 8,
                       kCents: Int = 16, seed: Long = 42L,
                       fitSampleCap: Long = 65536): AnnIndex = {
     val cents = ivfCentroids(corpus, nCells, seed, fitSampleCap)
     val books = pqCodebooks(corpus, m, kCents, seed, fitSampleCap)
     val enc = encodeIvfPq(corpus, cents, books)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     new AnnIndex(cents, books, enc, Seq(enc))
   }
 
@@ -1008,10 +995,7 @@ object Similarity {
     * [[annRecall]] against the exact ranking measures pure CANDIDATE
     * recall: every true neighbor the ADC stage admits lands in the right
     * order. Both quantizer fits are the deterministic q132 ones; the
-    * generated q136 oracle replays ADC candidates + exact re-rank in SQL.
-    *
-    * Cache contract: same as [[ivfPqTopK]] (caller frees the pinned code
-    * index; use [[buildIvfPqIndex]] in long-lived sessions). */
+    * generated q136 oracle replays ADC candidates + exact re-rank in SQL. */
   def ivfPqRefineTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                       refineFactor: Int = 4,
                       nCells: Int = 16, nProbe: Int = AnnNProbe,
@@ -1235,7 +1219,7 @@ final class AnnIndex private[ops] (
     * encode runs. */
   def append(newVecs: DataFrame): AnnIndex = {
     val enc = Similarity.encodeIvfPq(newVecs, cents, books)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     new AnnIndex(cents, books, index.unionByName(enc), pinned :+ enc)
   }
 
@@ -1254,5 +1238,5 @@ final class AnnIndex private[ops] (
 
   /** Release every relation this handle (and the handles it was appended
     * from) pinned. The index is unusable afterwards. */
-  def unpersist(): Unit = pinned.foreach(_.unpersist())
+  def unpersist(): Unit = pinned.foreach(Boundary.release)
 }

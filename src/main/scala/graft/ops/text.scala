@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Text-analysis operators for the large-scale training-data pipeline:
   * tokenization, language-ID heuristic, quality scoring, token counting and
@@ -210,7 +211,7 @@ object TextAnalysis {
     val w = tf.join(df, "token")
       .select(col("doc_id"), col("token"),
         (col("tf") * log(lit(n.toDouble) / col("doc_freq"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val norms = w.groupBy("doc_id")
       .agg(sqrt(sum(col("w") * col("w"))).as("norm"))
     // Query form: filter the cached postings BEFORE the token join (the
@@ -557,18 +558,16 @@ object TextAnalysis {
     val spark = docs.sparkSession
     import spark.implicits._
     // The sketch phase's two consumers (candidate pass, total) share one
-    // cached tokenize — the q81/q98 inverted-index discipline — and the
-    // cache is RELEASED before returning (try/finally, the dedup.scala
-    // contract): both are driver actions, and the candidate set is
+    // pinned tokenize — the q81/q98 inverted-index discipline — released
+    // before returning: both are driver actions, and the candidate set is
     // driver-small BY THE SKETCH BOUND (≤ ⌈2/minShare⌉ survivors per task),
-    // so collecting it here costs O(tasks/minShare) strings, not a cache
-    // entry pinned past the call. The returned verify plan re-tokenizes
-    // once — one extra scan, zero caller-owned cache state.
-    val toks = docs.select(explode(tokens(col("text"))).as("token"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // so collecting it here costs O(tasks/minShare) strings, not a pin
+    // held past the call. The returned verify plan re-tokenizes once — one
+    // extra scan, zero caller-owned state.
     val cap = math.ceil(2.0 / minShare).toInt
     val (candidateTokens, total) =
-      try {
+      Boundary.scoped {
+        val toks = Boundary.pin(docs.select(explode(tokens(col("text"))).as("token")))
         val cands = toks.as[String].mapPartitions { it =>
           val counters = scala.collection.mutable.HashMap.empty[String, Long]
           it.foreach { t =>
@@ -587,7 +586,7 @@ object TextAnalysis {
           counters.keysIterator
         }.distinct().collect()
         (cands, toks.agg(count(lit(1))).as[Long].head())
-      } finally toks.unpersist()
+      }
     docs.select(explode(tokens(col("text"))).as("token"))
       .join(broadcast(candidateTokens.toSeq.toDF("token")), "token")
       .groupBy("token").agg(count(lit(1)).as("n"))
@@ -622,12 +621,12 @@ object TextAnalysis {
         split(col("g"), " ").getItem(0).as("w1"),
         split(col("g"), " ").getItem(1).as("w2"))
     val pc = b.groupBy("lang", "w1", "w2").agg(count(lit(1)).as("n_pair"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val nb = pc.groupBy("lang").agg(sum("n_pair").cast("double").as("__nbg"))
     val ug = docs
       .select(col("lang"), explode(tokens(col("text"))).as("tok"))
       .groupBy("lang", "tok").agg(count(lit(1)).cast("double").as("__c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val nu = ug.groupBy("lang").agg(sum("__c").as("__nu"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("lang")
@@ -668,7 +667,7 @@ object TextAnalysis {
     val st = docs
       .select(col("source"), explode(tokens(col("text"))).as("t"))
       .groupBy("source", "t").agg(count(lit(1)).cast("double").as("__nst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val byTok = st.groupBy("t").agg(sum("__nst").as("__nt"))
     val bySrc = st.groupBy("source").agg(sum("__nst").as("__ns"))
     val total = byTok.agg(sum("__nt").as("__n"))
@@ -744,7 +743,6 @@ object TextAnalysis {
   def bpeTrain(docs: org.apache.spark.sql.DataFrame, nMerges: Int): org.apache.spark.sql.DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = docs.sparkSession
-    import org.apache.spark.storage.StorageLevel
     // adjacent pairs via the fused kernel (one JVM pass per word) — the
     // transform+element_at composition paid an interpreted lambda per
     // position per word per iteration
@@ -758,10 +756,10 @@ object TextAnalysis {
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(col("cnt"), charSyms(col("w")).as("syms"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .transform(Boundary.pin)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     // The parent vocab's pin is dropped LAZILY — one iteration later, right
-    // after the pair-count collect has materialized the child's cache from
+    // after the pair-count collect has filled the child's cache from
     // the parent's blocks. The former eager shape (next.count() then
     // unpersist parent) paid one extra materialization job per iteration,
     // plus a full merge-apply pass for the FINAL vocab, which nothing ever
@@ -776,9 +774,9 @@ object TextAnalysis {
         .agg(sum("cnt").as("n"))
         .orderBy(col("n").desc, col("l").asc, col("r").asc)
         .limit(1).collect()
-      // the collect above materialized `vocab`'s cache — the parent's
+      // the collect above filled `vocab`'s cache — the parent's
       // blocks have served their one consumer and can go
-      parent.foreach(_.unpersist(blocking = false))
+      parent.foreach(Boundary.release)
       parent = None
       if (top.isEmpty) exhausted = true
       else {
@@ -786,13 +784,13 @@ object TextAnalysis {
         merges += ((it.toLong, a, b, a + b, n))
         val next = vocab
           .withColumn("syms", mergeExpr(col("syms"), a, b))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(Boundary.pin)
         parent = Some(vocab)
         vocab = next
       }
     }
-    parent.foreach(_.unpersist(blocking = false))
-    vocab.unpersist()
+    parent.foreach(Boundary.release)
+    Boundary.release(vocab)
     import spark.implicits._
     merges.toSeq.toDF("iter", "lhs", "rhs", "merged", "n")
   }
@@ -971,11 +969,10 @@ object TextAnalysis {
                         labelFloor: Double = 0.4,
                         dim: Int = QualityModel.Dim,
                         nIter: Int = 4,
-                        lr: Double = 4.0): org.apache.spark.sql.DataFrame = {
+                        lr: Double = 4.0): org.apache.spark.sql.DataFrame = Boundary.scoped {
     require(dim >= 1 && nIter >= 1, s"need dim >= 1, nIter >= 1; got $dim/$nIter")
     val spark = docs.sparkSession
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val toks = tokens(col("text"))
     // Pin the TOKEN ARRAYS, not the raw text: every GD iteration's forward
     // pass re-scored the corpus, and scoring from cached tokens is
@@ -989,14 +986,14 @@ object TextAnalysis {
         (graft.Num.rnd(qualityScore(col("text")), 4) >= lit(labelFloor))
           .cast("int").as("y"))
       .filter(col("n") > 0)
-      .persist(lvl)
+      .transform(Boundary.pin)
     val tk = col("toks")
     val fx = base
       .select(col("doc_id"), explode(concat(tk, shingles(tk, 2))).as("x"))
       .select(col("doc_id"),
         (polyHash(col("x")) % lit(dim.toLong)).cast("int").as("j"))
       .groupBy("doc_id", "j").agg(count(lit(1)).as("cnt"))
-      .persist(lvl)
+      .transform(Boundary.pin)
     val nDocs = base.count()
     require(nDocs > 0, "trainQualityModel: no document has a token")
     var w = Seq.fill(dim)(0.0)
@@ -1021,8 +1018,6 @@ object TextAnalysis {
       w = (0 until dim).map(j => upd(j.toLong))
       b = upd(-1L)
     }
-    base.unpersist(blocking = false)
-    fx.unpersist(blocking = false)
     ((0 until dim).map(j => (j.toLong, w(j))) :+ ((-1L, b)))
       .toDF("j", "weight")
   }

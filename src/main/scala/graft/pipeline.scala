@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Results of one adjustment run: the adjusted consent cohort (one row per
   * consent row — cardinality preserved, reference test
@@ -72,11 +72,11 @@ object CocoaPipeline {
         // than recomputing the (codegen'd) distance join for pass 2.
         // Both passes take the band-pruned paths when a numeric feature
         // exists (banded top-1, per-cohort-width bucket radius join) — the
-        // dense pairs relation is never materialized; equivalence pinned by
+        // dense pairs relation is never built; equivalence pinned by
         // PropertySpec.
         // No pipeline-level cohort persist: pass 1's banded prep already
         // pins the prefixed cohort projections (bandPrep c0/nc0,
-        // MEMORY_AND_DISK), and pass 2's radius join builds the IDENTICAL
+        // Boundary.pin), and pass 2's radius join builds the IDENTICAL
         // projection — it hits that cache by plan equality. The r8
         // pipeline-level persists only built a second copy of the same
         // relation (measured r9: removing them cut q18 ~5.6 → 4.7 s steady
@@ -87,7 +87,7 @@ object CocoaPipeline {
             NeighborJoin.topKBanded(consent, noconsent, spec, 1, broadcastConsent)
           else NeighborJoin.topK(allPairs, spec, 1.0)
         val nearest = Summary.nearestDistances(pass1, spec)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+          .transform(Boundary.pin)
         val radii = Summary.minRadiusByPercentilePerCohort(nearest, p, spec)
         finish(consent, noconsent,
           NeighborJoin.withinRadiusBucketedPerCohort(consent, noconsent, radii, spec,
@@ -98,10 +98,10 @@ object CocoaPipeline {
   private def finish(consent: DataFrame, noconsent: DataFrame,
                      selected: DataFrame, spec: CohortSpec): AdjustmentResult = {
     // The selected-pairs relation (O(k·|NC|) rows) fans out to four
-    // consumers (scatter-add, weights, naive numerator, summary); persist it
+    // consumers (scatter-add, weights, naive numerator, summary); pin it
     // so the expensive upstream similarity join runs once, like the
     // reference's once-fitted matcher.
-    val sel = selected.persist(StorageLevel.MEMORY_AND_DISK)
+    val sel = Boundary.pin(selected)
     val shares = Adjust.softmaxShares(sel, spec)
     val adjusted = Adjust.distribute(consent, shares, spec)
     val matchedNc = Summary.nearestDistances(sel, spec)

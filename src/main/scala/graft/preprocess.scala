@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Cohort cleaning + feature encoding.
   *
@@ -84,75 +85,29 @@ object Preprocess {
       row_number().over(Window.orderBy(orderCols.map(col(_)): _*)).cast("long") - 1)
 
   /** Scale path for [[withRowIds]]: the same deterministic dense ids with
-    * NO single-task stage. `repartitionByRange` range-partitions on the
-    * order columns (each partition holds a contiguous key range, sorted
-    * within via `sortWithinPartitions`), a driver-collected count per
-    * partition turns into cumulative offsets (one tiny job over partition
-    * counts — the classic zipWithIndex shape), and a `mapPartitions` adds
-    * offset + local position. Output equals [[withRowIds]] row-for-row when
-    * the ordering keys are unique — pinned by PreprocessSpec. */
+    * NO single-task stage — one [[rangeScan]] whose per-partition summary
+    * is the row count. Output equals [[withRowIds]] row-for-row when the
+    * ordering keys are unique — pinned by PreprocessSpec. */
   def withRowIdsDistributed(df: DataFrame, orderCols: Seq[String],
-                            outCol: String = "idx"): DataFrame = {
-    // Persisted (at RDD level) so the count job and the id job see the SAME
-    // partitions: RangePartitioner samples by partition-iteration order, so
-    // re-materializing the lineage after an upstream shuffle could split
-    // differently. RDD caching (unlike Dataset.persist, which the cache
-    // manager pins until an explicit unpersist) is ContextCleaner-managed:
-    // the block is freed once the returned plan is garbage-collected, so
-    // repeated calls don't accumulate cached copies.
-    // Explicit partition count: an advisory repartitionByRange is fair game
-    // for AQE coalescing (small bytes ⇒ one partition ⇒ the single-task
-    // stage this op exists to avoid); an explicit count is binding.
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // RangePartitioner's bound sampling is a FULL pass over the input
-    // (reservoir sample per partition), so an uncached lineage — often a
-    // whole kernel-heavy admission chain — would run twice: once for the
-    // sample, once for the shuffle. Pin the input across those two passes
-    // and free it as soon as the counts action has materialized the
-    // sorted RDD (the narrow projection the caller hands in, not the
-    // corpus).
-    // no-op when the caller already pinned the frame (e.g. the banded
-    // prep's cohort projections): unpersisting here would silently drop
-    // the caller's cache entry (uncache matches by plan).
-    val callerPinned =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val inp = if (callerPinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = inp
-      .repartitionByRange(n, orderCols.map(col(_)): _*)
-      .sortWithinPartitions(orderCols.map(col(_)): _*)
-    val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator((i, it.size.toLong))
-    }.collect().sortBy(_._1).map(_._2)
-    if (!callerPinned) inp.unpersist(blocking = false)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val schema = sorted.schema.add(outCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val withIds = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var next = offsets(pid)
-      it.map { r =>
-        val out = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ next)
-        next += 1
-        out
+                            outCol: String = "idx"): DataFrame =
+    rangeScan(df, orderCols, outCol)(_.size.toLong) { counts =>
+      val offsets = counts.scanLeft(0L)(_ + _)
+      pid => {
+        var next = offsets(pid) - 1
+        _ => { next += 1; next }
       }
     }
-    df.sparkSession.createDataFrame(withIds, schema)
-  }
 
   /** Distributed PER-GROUP dense row ids — the scale twin of
     * `row_number().over(Window.partitionBy(groupCols…).orderBy(orderCols…))
     * − 1`, which ships EVERY row of a group through one task (a 100 TB
-    * stratum = one sort on one core). Same zipWithIndex shape as
-    * [[withRowIdsDistributed]], generalized: range-partition on
-    * (group ++ order) — a group's rows may span partitions, but each
-    * partition holds a contiguous sorted slice of it — then one tiny job
-    * collects per-(partition, group) counts, cumulative offsets per group
-    * across partitions, and a streaming per-partition pass adds
-    * offset + local position. CONTRACT: the collected state is
-    * O(|partitions| × |distinct groups|) driver rows and the offsets map
-    * ships in every task closure — the operator is for BOUNDED-CARDINALITY
-    * strata (languages, sources, shards; its caller
+    * stratum = one sort on one core). A [[rangeScan]] on (group ++ order):
+    * a group's rows may span partitions, but each partition holds a
+    * contiguous sorted slice of it, so per-(partition, group) counts give
+    * cumulative offsets per group across partitions. CONTRACT: the
+    * collected state is O(|partitions| × |distinct groups|) driver rows and
+    * the offsets map ships in every task closure — the operator is for
+    * BOUNDED-CARDINALITY strata (languages, sources, shards; its caller
     * [[graft.ops.Sampling.interleaveByStrata]] is exactly that), not for
     * data-sized keys like user ids, where the per-group id should come
     * from a window over the key's own partition instead. Requires
@@ -162,23 +117,8 @@ object Preprocess {
                                  orderCols: Seq[String],
                                  outCol: String = "idx"): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty (use withRowIdsDistributed)")
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val keyCols = groupCols ++ orderCols
-    // pinned across the range-sample + shuffle double pass (see
-    // withRowIdsDistributed), freed right after the counts action
-    // no-op when the caller already pinned the frame (e.g. the banded
-    // prep's cohort projections): unpersisting here would silently drop
-    // the caller's cache entry (uncache matches by plan).
-    val callerPinned =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val inp = if (callerPinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = inp
-      .repartitionByRange(n, keyCols.map(col(_)): _*)
-      .sortWithinPartitions(keyCols.map(col(_)): _*)
-    val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gIdx = groupCols.map(sorted.schema.fieldIndex)
-    val counts = rdd.mapPartitionsWithIndex { case (pid, it) =>
+    val gIdx = groupCols.map(df.schema.fieldIndex)
+    rangeScan(df, groupCols ++ orderCols, outCol) { it =>
       // LinkedHashMap: a partition sees each group as one contiguous run,
       // so this is O(groups-in-partition) entries however large the slice
       val m = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Long]
@@ -186,27 +126,25 @@ object Preprocess {
         val k = gIdx.map(r.get)
         m.update(k, m.getOrElse(k, 0L) + 1L)
       }
-      m.iterator.map { case (k, c) => (pid, k, c) }
-    }.collect()
-    if (!callerPinned) inp.unpersist(blocking = false)
-    val offsets: Map[(Int, Seq[Any]), Long] = counts.groupBy(_._2)
-      .flatMap { case (g, cs) =>
-        val inOrder = cs.sortBy(_._1)
-        inOrder.map(_._1).zip(inOrder.map(_._3).scanLeft(0L)(_ + _))
-          .map { case (pid, off) => (pid, g) -> off }
-      }
-    val schema = sorted.schema.add(outCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val withIds = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      val next = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
-      it.map { r =>
-        val k = gIdx.map(r.get)
-        val v = next.getOrElse(k, offsets.getOrElse((pid, k), 0L))
-        next.update(k, v + 1)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v)
+      m.toSeq
+    } { counts =>
+      val offsets: Map[(Int, Seq[Any]), Long] = counts.zipWithIndex
+        .flatMap { case (cs, pid) => cs.map { case (k, c) => (pid, k, c) } }
+        .groupBy(_._2)
+        .flatMap { case (g, cs) =>
+          cs.map(_._1).zip(cs.map(_._3).scanLeft(0L)(_ + _))
+            .map { case (pid, off) => (pid, g) -> off }
+        }
+      pid => {
+        val next = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+        r => {
+          val k = gIdx.map(r.get)
+          val v = next.getOrElse(k, offsets.getOrElse((pid, k), 0L))
+          next.update(k, v + 1)
+          v
+        }
       }
     }
-    df.sparkSession.createDataFrame(withIds, schema)
   }
 
   /** Distributed INCLUSIVE running SUM of `valueCol` (integral) in the
@@ -214,89 +152,76 @@ object Preprocess {
     * a 0/1 flag to an arbitrary long-valued column: the scale twin of
     * `sum(value).over(Window.orderBy(orderCols…).rowsBetween(
     * unboundedPreceding, currentRow))` without the one-task global window.
-    * Same two-job shape (range-partition + sort, per-partition sums →
-    * cumulative offsets, streaming pass); order keys must form a total
-    * order. Used by the token-budget corpus selection. */
+    * Order keys must form a total order. Used by the token-budget corpus
+    * selection. */
   def withRunningSum(df: DataFrame, orderCols: Seq[String],
                      valueCol: String, outCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // pinned across the range-sample + shuffle double pass (see
-    // withRowIdsDistributed), freed right after the sums action
-    // no-op when the caller already pinned the frame (e.g. the banded
-    // prep's cohort projections): unpersisting here would silently drop
-    // the caller's cache entry (uncache matches by plan).
-    val callerPinned =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val inp = if (callerPinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = inp
-      .repartitionByRange(n, orderCols.map(col(_)): _*)
-      .sortWithinPartitions(orderCols.map(col(_)): _*)
-    val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vIdx = sorted.schema.fieldIndex(valueCol)
+    val vIdx = df.schema.fieldIndex(valueCol)
     def v(r: org.apache.spark.sql.Row): Long = r.getAs[Number](vIdx).longValue()
-    val sums = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator((i, it.foldLeft(0L)(_ + v(_))))
-    }.collect().sortBy(_._1).map(_._2)
-    if (!callerPinned) inp.unpersist(blocking = false)
-    val offsets = sums.scanLeft(0L)(_ + _)
-    val schema = sorted.schema.add(outCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val out = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var acc = offsets(pid)
-      it.map { r =>
-        acc += v(r)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
+    rangeScan(df, orderCols, outCol)(_.foldLeft(0L)(_ + v(_))) { sums =>
+      val offsets = sums.scanLeft(0L)(_ + _)
+      pid => {
+        var acc = offsets(pid)
+        r => { acc += v(r); acc }
       }
     }
-    df.sparkSession.createDataFrame(out, schema)
   }
 
   /** Distributed INCLUSIVE running count of rows with `flagCol` != 0 in the
-    * total order of `orderCols` — the zipWithIndex-shaped scale twin of
+    * total order of `orderCols` — the scale twin of
     * `sum(flag).over(Window.orderBy(orderCols…).rowsBetween(
     * unboundedPreceding, currentRow))`, which funnels every row through ONE
-    * task when there is no partition key. Same two-job shape as
-    * [[withRowIdsDistributed]]: range-partition + sort, one tiny job for
-    * per-partition flag counts → cumulative offsets, then a streaming
-    * per-partition pass. Requires the order keys to form a total order
-    * (ties would make both forms nondeterministic). Used by the banded
-    * neighbor join's global-cohort path; equivalence to the window form is
-    * pinned by PreprocessSpec. */
+    * task when there is no partition key. Requires the order keys to form
+    * a total order (ties would make both forms nondeterministic). Used by
+    * the banded neighbor join's global-cohort path; equivalence to the
+    * window form is pinned by PreprocessSpec. */
   def withRunningFlagCount(df: DataFrame, orderCols: Seq[String],
                            flagCol: String, outCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // pinned across the range-sample + shuffle double pass (see
-    // withRowIdsDistributed), freed right after the counts action
-    // no-op when the caller already pinned the frame (e.g. the banded
-    // prep's cohort projections): unpersisting here would silently drop
-    // the caller's cache entry (uncache matches by plan).
-    val callerPinned =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val inp = if (callerPinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = inp
-      .repartitionByRange(n, orderCols.map(col(_)): _*)
-      .sortWithinPartitions(orderCols.map(col(_)): _*)
-    val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val flagIdx = sorted.schema.fieldIndex(flagCol)
+    val flagIdx = df.schema.fieldIndex(flagCol)
     def flagged(r: org.apache.spark.sql.Row): Boolean =
       r.getAs[Number](flagIdx).longValue() != 0L
-    val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator((i, it.count(flagged).toLong))
-    }.collect().sortBy(_._1).map(_._2)
-    if (!callerPinned) inp.unpersist(blocking = false)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val schema = sorted.schema.add(outCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val out = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var acc = offsets(pid)
-      it.map { r =>
-        if (flagged(r)) acc += 1
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
+    rangeScan(df, orderCols, outCol)(_.count(flagged).toLong) { counts =>
+      val offsets = counts.scanLeft(0L)(_ + _)
+      pid => {
+        var acc = offsets(pid)
+        r => { if (flagged(r)) acc += 1; acc }
       }
     }
-    df.sparkSession.createDataFrame(out, schema)
+  }
+
+  /** The zipWithIndex-shaped skeleton of the distributed scans above:
+    * range-partition on `keyCols` (each partition a contiguous key range,
+    * sorted within), collect one `summarize` value per partition in one
+    * small job, and stream each partition once more, appending the long
+    * `label(summaries)(partition)` assigns to each row as `outCol`.
+    *
+    * The partition count is explicit because an advisory repartitionByRange
+    * is fair game for AQE coalescing (small bytes ⇒ one partition ⇒ the
+    * single-task stage these scans exist to avoid). The input is pinned
+    * across range sampling and the shuffle, because RangePartitioner's
+    * bound sampling is a full pass over it. The sorted relation is staged
+    * so the summary job and the labelling pass see the SAME partitions:
+    * re-running the lineage after an upstream shuffle could split
+    * differently. */
+  private def rangeScan[A](df: DataFrame, keyCols: Seq[String], outCol: String)(
+      summarize: Iterator[org.apache.spark.sql.Row] => A)(
+      label: IndexedSeq[A] => Int => org.apache.spark.sql.Row => Long): DataFrame = {
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val keys = keyCols.map(col(_))
+    val inp = Boundary.pin(df)
+    val sorted = Boundary.stage(
+      inp.repartitionByRange(n, keys: _*).sortWithinPartitions(keys: _*))
+    Boundary.release(inp)
+    val rows = sorted.rdd
+    val labelOf = label(rows.mapPartitionsWithIndex { (pid, it) =>
+      Iterator((pid, summarize(it)))
+    }.collect().toIndexedSeq.sortBy(_._1).map(_._2))
+    val out = rows.mapPartitionsWithIndex { (pid, it) =>
+      val next = labelOf(pid)
+      it.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ next(r)))
+    }
+    df.sparkSession.createDataFrame(out,
+      sorted.schema.add(outCol, org.apache.spark.sql.types.LongType, nullable = false))
   }
 
   /** Split a `sep`-joined hierarchy string into `levels` level columns

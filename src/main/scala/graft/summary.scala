@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Boundary
 
 /** Match-rate summary statistics and distance diagnostics
   * (reference: cocoa/nearest_consented_customers.py:90-143).
@@ -106,18 +107,15 @@ object Summary {
     val coh = spec.cohortCols
     // three consumers scan the input (sketch pass, below-count, bracket
     // rank) and its lineage is typically an expensive kNN join — pin it
-    // across the passes (same contract as minHashPairs' shingle cache: the
-    // returned lazy frame holds it; callers' clearCache / ContextCleaner
-    // free it). Re-measured r7 after the banded-input pins (BenchOne n=3,
+    // across the passes. Re-measured r7 after the banded-input pins (BenchOne n=3,
     // sf0.1, 16 cores): q69 ≈ 2.5 s vs q16's single-pass exact percentile
     // 1.75 s — the twin pays ~0.75 s of fixed multi-pass stage overhead
     // (cache build + two broadcast agg passes + bracket window); its value
     // is the bounded O(n/accuracy) per-cohort memory where the exact
     // aggregate's all-distinct-values buffer dies. At the 10× replica the
-    // twin runs ~7 s. Without this persist the kNN input lineage would run
+    // twin runs ~7 s. Without this pin the kNN input lineage would run
     // two more times on top of that.
-    val matchedNc = matchedNc0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val matchedNc = Boundary.pin(matchedNc0)
     val eps = 3.0 / accuracy
     val qlo = math.max(0.0, p - eps)
     val qhi = math.min(1.0, p + eps)

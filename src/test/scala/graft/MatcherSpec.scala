@@ -225,6 +225,50 @@ class MatcherSpec extends SparkSpec {
       .csv(s"$dir/out/*/adjustments_data.csv").count() == 4)
   }
 
+  test("RunPipeline and RunPipelineStream leave no pinned relations behind") {
+    val dir = Files.createTempDirectory("graft-leak").toString
+    val dates = Seq("2021-11-20", "2021-11-21", "2021-11-22")
+    val rows = (consent: Boolean) => for {
+      (d, di) <- dates.zipWithIndex
+      i <- 0 until (if (consent) 4 else 2)
+    } yield (s"${if (consent) "c" else "n"}$di$i", s"$d 1$i:00:00 UTC",
+      5.0 + i, d, if (i % 2 == 0) "dress" else "shoe", 1.0 + i + (if (consent) 0 else 0.5))
+    for (consent <- Seq(true, false)) {
+      val df = rows(consent).toDF("gclid", "conversion_timestamp", "conversion_value",
+          "conversion_date", "conversion_item", "basket_size")
+        .withColumn("conversion_date", to_date(col("conversion_date")))
+      val name = if (consent) "consent" else "noconsent"
+      df.write.parquet(s"$dir/num/$name")
+      df.drop("basket_size").write.parquet(s"$dir/cat/$name")
+    }
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/dates"))
+    dates.zipWithIndex.foreach { case (d, i) =>
+      Files.write(java.nio.file.Paths.get(s"$dir/dates/f$i.txt"), s"$d\n".getBytes)
+    }
+    // the session is shared with other suites: measure around each run
+    spark.catalog.clearCache()
+    def assertNoLeak(what: String)(run: => Unit): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      run
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$what left persisted RDDs $left")
+      assert(org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark),
+        s"$what left cached relations")
+    }
+    def batch(in: String, strategy: String) = RunPipeline.run(spark,
+      Array(s"$dir/$in/consent", s"$dir/$in/noconsent", s"$dir/out-$in-$strategy",
+        strategy))
+    assertNoLeak("k=2, categoricals only")(batch("cat", "k=2"))
+    assertNoLeak("k=2, one numeric column")(batch("num", "k=2"))
+    assertNoLeak("radius")(batch("num", "radius=2.0"))
+    assertNoLeak("percentile")(batch("num", "percentile=0.5"))
+    assertNoLeak("stream of three dates files")(RunPipelineStream.run(spark,
+      Array(s"$dir/num/consent", s"$dir/num/noconsent", s"$dir/out-stream",
+        s"$dir/dates", "k=2")))
+    assert(spark.read.option("header", "true")
+      .csv(s"$dir/out-stream/*/adjustments_data.csv").count() == 12)
+  }
+
   /** Launch a CLI main in its OWN JVM — the real deployment entry, not the
     * session-injected library path: fresh SparkSession from main's builder,
     * arg parsing, exit code. Classpath and JDK17 add-opens mirror the test

@@ -1397,6 +1397,28 @@ class OpsSpec extends SparkSpec {
     assert(out2 == Map(1L -> 1L, 2L -> 2L))
   }
 
+  test("lazy LSH operators release their pins with the caller's scope") {
+    val rng = new scala.util.Random(11)
+    val corpus = (0L until 40L).map(i =>
+      (i, Array.fill(8)(rng.nextFloat() * 2 - 1))).toDF("vec_id", "embedding")
+    val train = corpus.filter(col("vec_id") < 30)
+    val bench = corpus.filter(col("vec_id") >= 30)
+    val queries = corpus.filter(col("vec_id") < 5)
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    org.apache.spark.sql.graftbridge.Boundary.scoped {
+      Similarity.nearDupPairsLsh(corpus, 0.4).collect()
+      Similarity.semanticContaminatedLsh(train, bench, 0.5).collect()
+      Similarity.semanticContaminatedLshIndexed(train,
+        Similarity.buildSemIndex(bench), 0.5).collect()
+      Similarity.hardNegativesBanded(corpus, queries, 5, 0.1, 0.9).collect()
+      assert(!org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark))
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
+    assert(org.apache.spark.sql.graftbridge.Bridge.cacheIsEmpty(spark))
+  }
+
   test("semanticContaminatedLsh finds identical-embedding leaks deterministically") {
     val rng = new scala.util.Random(7)
     val bench = (0L until 20L).map(i =>
